@@ -7,14 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.{CosineSim, MinHashSig, SigMatchFraction, SimHash64, SortedIdPairs, WordShingles}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions, so any session built with
-  *
-  * {{{
-  * SparkSession.builder().config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  *
-  * (or `--conf spark.sql.extensions=graft.GraftExtensions` on a cluster)
-  * can call them from SQL:
+  * expressions as SQL functions, so any session built by
+  * [[graft.GraftSession]] (or with `--conf
+  * spark.sql.extensions=graft.GraftExtensions` on a cluster) can call
+  * them from SQL:
   *
   * {{{
   * SELECT cosine_sim(a.embedding, b.embedding) FROM ...

@@ -29,22 +29,6 @@ object Tables {
     cache.getOrElseUpdate(spark, s"$sfDir/$name.parquet")((s, p) => s.read.parquet(p))
   }
 
-  /** Width-pin a byte-small frame before a CPU-heavy per-row stage. The
-    * driver fixtures are single-row-group parquet files, so a scan is ONE
-    * split and AQE coalesces small exchanges to one partition — either
-    * way a regex/hash/signature kernel fused above it runs single-core on
-    * a 32-thread box. Size-gated: past the upper threshold the input is
-    * already wide (many files / row groups at corpus scale) and no
-    * exchange is forced, so nothing text-sized ever shuffles on account
-    * of this.
-    *
-    * `minBytes` (r14) is the LOWER gate: below it the serial kernel work
-    * is cheaper than the exchange roundtrip the pin inserts, so the pin
-    * must stand down — measured b2b at sf0.1 (tiny inputs) the
-    * unconditional pin cost 1.4–2× per query while the same pin won
-    * 1.5–2× at the ×10 fixture. Callers pick minBytes per kernel weight;
-    * 0 keeps the r13 unconditional behavior.
-    */
   /** Parquet-footer ROW COUNT of a fixture table — a pure metadata read
     * (no Spark job), memoized per (session, path). Scale gates need a
     * signal that separates fixtures whose BYTE sizes don't (VERDICT r14
@@ -87,6 +71,22 @@ object Tables {
       df: DataFrame, minRows: Long): DataFrame =
     if (tableRows(s, d, name) >= minRows) widenSmall(df) else df
 
+  /** Width-pin a byte-small frame before a CPU-heavy per-row stage. The
+    * driver fixtures are single-row-group parquet files, so a scan is ONE
+    * split and AQE coalesces small exchanges to one partition — either
+    * way a regex/hash/signature kernel fused above it runs single-core on
+    * a 32-thread box. Size-gated: past the upper threshold the input is
+    * already wide (many files / row groups at corpus scale) and no
+    * exchange is forced, so nothing text-sized ever shuffles on account
+    * of this.
+    *
+    * `minBytes` (r14) is the LOWER gate: below it the serial kernel work
+    * is cheaper than the exchange roundtrip the pin inserts, so the pin
+    * must stand down — measured b2b at sf0.1 (tiny inputs) the
+    * unconditional pin cost 1.4–2× per query while the same pin won
+    * 1.5–2× at the ×10 fixture. Callers pick minBytes per kernel weight;
+    * 0 keeps the r13 unconditional behavior.
+    */
   private[graft] def widenSmall(df: DataFrame, minBytes: Long = 0L): DataFrame = {
     val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (sz >= minBytes && sz < (512L << 20))

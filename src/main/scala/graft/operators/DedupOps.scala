@@ -124,7 +124,7 @@ object DedupOps {
     // real 100 TB scale the exchange is far above the advisory size and
     // the failure mode disappears.)
     // Pair generation stays a sh_h SELF-JOIN deliberately. The measured
-    // alternative (graft.tools.PairGenAB): fold the index into posting
+    // alternative (PERF_r05.md, ">2× residue"): fold the index into posting
     // lists once and explode codegen'd sorted_id_pairs — one fewer index
     // shuffle per query — is 1.6× SLOWER warm, because the sort-merge
     // join emits candidates as an allocation-free merge of sorted unsafe

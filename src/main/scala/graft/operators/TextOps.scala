@@ -206,8 +206,8 @@ object TextOps {
     * stage is shared between both branches at runtime (ReuseExchange — the
     * same trick activityConcentration uses for its totals).
     *
-    * Measured A/B vs the Space-Saving path below (graft.tools.HeavyAB,
-    * sf10 = 500 k docs / ~100 M tokens): two-action exact 4.3 s, sketch
+    * Measured A/B vs the Space-Saving path below (PERF_r08.md, "sf10
+    * probe"; sf10 = 500 k docs / ~100 M tokens): two-action exact 4.3 s, sketch
     * 9.7 s; this single-DAG reuse-exchange form 2.5 s (bench min-of-2) —
     * the typed-UDAF update per token costs more than the vocab-bounded
     * shuffle it avoids, at every scale where the vocabulary fits executor

@@ -250,13 +250,15 @@ final class LogDriverServer(
       emit(df)
       if (follow) {
         // reference cadence: 1 s polls, give up after followIdlePolls
-        // empty ones (src/logger.rs:287-288)
+        // empty ones (src/logger.rs:287-288). Every poll keeps the
+        // request's Since/Until range, as the reference re-issues its
+        // cursor with the same bounds (src/logger.rs:320-343): a follow
+        // whose initial range was empty must not replay older lines.
         var idle = 0
         while (idle < followIdlePolls) {
           Thread.sleep(followPollMs)
-          val more = graft.logs
-            .where(col("container_id") === containerId && col("seq") > lastSeq)
-            .orderBy(col("seq"))
+          val more = graft.readLogs(Some(containerId), since, until, 0, follow = true)
+            .where(col("seq") > lastSeq)
           if (emit(more) > 0) idle = 0 else idle += 1
         }
       }

@@ -142,19 +142,27 @@ class LogDriverServerSpec extends SparkSpec {
         === Seq("wire 3\n", "wire 4\n"))
 
       // follow: a late burst staged while the stream is open must be
-      // emitted before the idle give-up closes it
+      // emitted before the idle give-up closes it. A second follower whose
+      // Since lies after the committed lines starts with an empty range;
+      // its polls must keep that range and deliver only the late burst.
       val followReq = readReq.replace("\"Follow\": false", "\"Follow\": true")
-      val collector = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-      val reader = new Thread(() => collector.set(
-        decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", followReq)))))
-      reader.start()
-      Thread.sleep(400) // initial batch emitted, stream idling
+      val sinceReq = followReq.replaceFirst("\"Since\": \"[^\"]*\"",
+        s"\"Since\": \"${java.time.Instant.ofEpochSecond(0, t0 + 4500000000L)}\"")
+      val readers = Seq(followReq, sinceReq).map { req =>
+        val collected = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
+        val reader = new Thread(() => collected.set(
+          decodedLines(bodyOf(post(sock, "/LogDriver.ReadLogs", req)))))
+        reader.start()
+        (reader, collected)
+      }
+      Thread.sleep(400) // initial batches emitted, streams idling
       val late = Paths.get(g.stagingDir("c1"))
       Files.write(late.resolve("late.pblog"),
         (5 until 8).map(entryBytes).foldLeft(Array.emptyByteArray)(_ ++ _))
-      reader.join(30000)
-      assert(!reader.isAlive, "follow stream must give up after idle polls")
-      assert(collector.get() === (0 until 8).map(i => s"wire $i\n"))
+      readers.foreach(_._1.join(30000))
+      assert(readers.forall(!_._1.isAlive), "follow stream must give up after idle polls")
+      assert(readers(0)._2.get() === (0 until 8).map(i => s"wire $i\n"))
+      assert(readers(1)._2.get() === (5 until 8).map(i => s"wire $i\n"))
 
       // StopLogging resolves by fifo path (docker.rs:88-91)
       assert(jsonStr(post(sock, "/LogDriver.StopLogging",
